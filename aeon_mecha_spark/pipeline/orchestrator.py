@@ -10,19 +10,24 @@ Reference model → Spark model:
 - ``key_source`` (an SQL expression over upstream tables) → a function
   ``SparkSession → DataFrame`` of candidate primary keys;
 - ``populate()``'s per-key loop inside MySQL transactions → ONE set-at-once
-  Spark job: ``pending = key_source ANTI-JOIN done`` → transform *all*
-  pending keys in a single DataFrame plan → atomic append. The per-key
-  loop in the reference is an artifact of row-store transactions, not of
-  the computation; batch recompute is both simpler and ~#keys× faster.
+  pass: ``pending = key_source ANTI-JOIN done`` → transform *all*
+  pending keys in a single DataFrame plan, restricted to them by a
+  semi-join → one cache + count + atomic append. Before the transform
+  pending is only checked for emptiness (so a no-op call never runs the
+  transform), never cached or counted, and the append does not re-check
+  the stored table (pending already excludes it). The per-key loop in
+  the reference is an artifact of row-store transactions, not of the
+  computation; batch recompute is both simpler and ~#keys× faster.
 - per-key rollback → job-level atomicity: the append only commits if the
   whole transform succeeds (Parquet dir commit protocol).
 - 3-phase make_fetch/make_compute/make_insert (spike_sorting.py:174-382)
   → read-DF / transform / write-DF, which is exactly a Spark job.
 
-Idempotency: appends anti-join on the PK against what's already stored,
-so re-running after a partial failure or on overlapping key_sources never
-duplicates rows — the analog of the reference's skip-if-ingested guards
-(acquisition.py:243-244, ephys.py:449-454).
+Idempotency: pending keys and ``Table.insert`` anti-join on the PK
+against what's already stored, so re-running after a partial failure or
+on overlapping key_sources never duplicates rows — the analog of the
+reference's skip-if-ingested guards (acquisition.py:243-244,
+ephys.py:449-454).
 """
 
 from __future__ import annotations
@@ -81,7 +86,9 @@ class Table:
         Returns the number of rows appended."""
         spark = df.sparkSession
         if skip_duplicates and self.exists(spark):
-            done = spark.read.parquet(self.path).select(*self.pk).dropDuplicates()
+            # a left_anti join drops a row on any match, so duplicate
+            # stored keys need no dedupe (it would cost a shuffle)
+            done = spark.read.parquet(self.path).select(*self.pk)
             df = df.join(done, self.pk, "left_anti")
         df = df.cache()
         n = df.count()
@@ -174,6 +181,8 @@ class ComputedTable:
                 tables — streams_maker.py:202-216).
     make        (SparkSession, pending_keys DF) → full rows DF. Must be
                 deterministic; it runs over *all* pending keys at once.
+                Rows it emits for keys outside ``pending`` (stored or
+                unknown keys) are dropped, never inserted.
     """
 
     table: Table
@@ -186,28 +195,44 @@ class ComputedTable:
         done = self.table.read(spark)
         if done is None:
             return ks
-        return ks.join(done.select(*self.table.pk).dropDuplicates(), self.table.pk, "left_anti")
+        return ks.join(done.select(*self.table.pk), self.table.pk, "left_anti")
 
     def populate(self, spark: SparkSession, ledger: "RunLedger | None" = None) -> int:
+        """Make and append every pending key in one pass: ``make`` runs
+        over the uncached pending keys, its rows are restricted to them by
+        one ``left_semi`` join, and ``Table.insert`` caches, counts and
+        writes the result once. Pending already excludes every stored key,
+        so the insert skips its own anti-join. Returns the rows inserted.
+
+        An emptiness check on pending comes first, so a no-op call never
+        builds or runs ``make`` (whose plan may scan a whole raw tree), and
+        a DAG sweep is mostly no-op calls. A round with pending keys pays
+        for it: the pending plan (key_source and the stored keys) runs
+        once more, in the check. The pending count itself is not taken
+        (see ``RunLedger``)."""
         t0 = time.time()
-        pend = self.pending(spark).cache()
-        n_pending = pend.count()
-        if n_pending == 0:
-            pend.unpersist()
+        pend = self.pending(spark)
+        if pend.isEmpty():
             if ledger:
                 ledger.record(self.table.name, 0, 0, time.time() - t0, "noop")
             return 0
-        rows = self.make(spark, pend)
-        n = self.table.insert(rows)
-        pend.unpersist()
+        rows = self.make(spark, pend).join(pend, self.table.pk, "left_semi")
+        n = self.table.insert(rows, skip_duplicates=False)
         if ledger:
-            ledger.record(self.table.name, n_pending, n, time.time() - t0, "ok")
+            ledger.record(self.table.name, n, n, time.time() - t0, "ok")
         return n
 
 
 class RunLedger:
     """Append-only populate audit log (the analog of DataJoint's job
-    table) — one JSON line per populate call."""
+    table) — one JSON line per populate call.
+
+    Status is ``noop`` when nothing was pending, ``ok`` otherwise. The
+    one-pass populate never counts its pending keys, so ``n_pending``
+    records the rows inserted, the same number as ``n_inserted`` (the
+    keys made, when ``make`` emits one row per key). A ``make`` that
+    drops some pending keys therefore cannot be seen from the ledger; one
+    that drops them all shows as ``ok`` with nothing inserted."""
 
     def __init__(self, root: str):
         self.path = os.path.join(root, "_ledger.jsonl")

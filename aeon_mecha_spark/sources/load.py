@@ -13,7 +13,9 @@ Reference semantics re-expressed:
    driver-side on the listing (the analog of partition pruning; O(#files)
    metadata, no data I/O).
 3. *Parse*: CSV chunks via the native Spark CSV scan (splittable, JVM);
-   binary chunks via ``binaryFile`` + ``mapInPandas`` numpy decode.
+   binary chunks via ``mapInPandas`` over the discovered paths, each task
+   reading a contiguous run of files and decoding them with numpy, in
+   (chunk_file, sample_idx) order by construction.
 4. *Exact trim*: a final ``time ∈ [start, end)`` filter — pushed down by
    Catalyst into the scan for CSV.
 
@@ -150,51 +152,65 @@ def load(
     start: datetime | None = None,
     end: datetime | None = None,
 ) -> DataFrame:
-    """``load(root, reader, start, end)`` → DataFrame sorted by time /
-    sample order, exact-trimmed to [start, end)."""
-    files = discover_chunk_files(roots, reader, start, end, spark=spark)
-    if not files:
-        empty_schema = reader.spark_schema
-        if reader.kind != "harp_csv":
-            empty_schema += ", chunk_file string"  # match the non-empty shape
-        return spark.createDataFrame([], schema=empty_schema)
-    paths = [p for p, _ in files]
+    """``load(root, reader, start, end)`` → DataFrame of the window.
 
-    if reader.kind == "harp_csv":
-        raw_cols = ["aeon_time", *reader.columns]
-        schema = ", ".join(
-            f"`{c}` double" for c in raw_cols
+    CSV streams are sorted by time and exact-trimmed to [start, end).
+    Binary streams (no time column) come out in (chunk_file, sample_idx)
+    order by construction: the files are listed by name and split into
+    contiguous runs of about ``spark.sql.files.maxPartitionBytes`` (at most
+    ``defaultParallelism`` of them), one per task, and each task reads and
+    decodes its files in that order, each in
+    sample order, so the plan has no global sort — no Exchange, and no
+    range-sampling job that would run the decode a second time. Tasks open their files with
+    plain Python I/O, the same POSIX access discovery already relies on.
+    Rows of two files that share a name (under different directories)
+    stay grouped per file.
+    """
+    files = discover_chunk_files(roots, reader, start, end, spark=spark)
+    if reader.kind != "harp_csv":
+        schema = reader.spark_schema + ", chunk_file string"
+        if not files:
+            return spark.createDataFrame([], schema=schema)
+        paths = sorted((p for p, _ in files), key=lambda p: (os.path.basename(p), p))
+        # parallelize slices its list contiguously, so any slice count
+        # keeps the file order. Like a file scan's splits, a slice holds
+        # about ``files.maxPartitionBytes`` of chunks, and there are at most
+        # one per core: a many-file history of small chunks stays a few
+        # tasks and output files, not one per chunk
+        split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        n_bytes = sum(os.path.getsize(p) for p in paths)
+        n_slices = max(1, min(len(paths), spark.sparkContext.defaultParallelism, -(-n_bytes // split)))
+        path_df = spark.createDataFrame(
+            spark.sparkContext.parallelize([(p,) for p in paths], n_slices), "path string"
         )
-        df = spark.read.csv(paths, schema=schema, header=True)
-        df = df.select(
-            F.timestamp_micros(
-                F.round((F.col("aeon_time") + F.lit(float(HARP_EPOCH_OFFSET_S))) * 1e6, 0).cast("long")
-            ).alias("time"),
-            *[F.col(c) for c in reader.columns],
-        )
-    else:
-        binf = spark.read.format("binaryFile").load(paths)
         rdr = reader
 
         def decode(batches):
-            import pandas as pd
-
             for pdf in batches:
-                for _, row in pdf.iterrows():
-                    out = decode_binary(rdr, row["content"])
-                    out.insert(0, "_file", row["path"])
+                for path in pdf["path"]:
+                    with open(path, "rb") as f:
+                        out = decode_binary(rdr, f.read())
+                    out["chunk_file"] = os.path.basename(path)
                     yield out
 
-        schema = "_file string, " + rdr.spark_schema
-        df = binf.select("path", "content").mapInPandas(decode, schema=schema)
-        df = df.withColumn("chunk_file", F.element_at(F.split(F.col("_file"), "/"), -1)).drop("_file")
+        return path_df.mapInPandas(decode, schema=schema)
 
-    if start is not None and reader.kind == "harp_csv":
+    if not files:
+        return spark.createDataFrame([], schema=reader.spark_schema)
+    raw_cols = ["aeon_time", *reader.columns]
+    schema = ", ".join(f"`{c}` double" for c in raw_cols)
+    df = spark.read.csv([p for p, _ in files], schema=schema, header=True)
+    df = df.select(
+        F.timestamp_micros(
+            F.round((F.col("aeon_time") + F.lit(float(HARP_EPOCH_OFFSET_S))) * 1e6, 0).cast("long")
+        ).alias("time"),
+        *[F.col(c) for c in reader.columns],
+    )
+    if start is not None:
         df = df.filter(F.col("time") >= F.lit(start))
-    if end is not None and reader.kind == "harp_csv":
+    if end is not None:
         df = df.filter(F.col("time") < F.lit(end))
-    order = "time" if reader.kind == "harp_csv" else ["chunk_file", "sample_idx"]
-    return df.orderBy(order) if isinstance(order, str) else df.orderBy(*order)
+    return df.orderBy("time")
 
 
 def stream_view(

@@ -7,10 +7,11 @@ A Reader here is declarative: file pattern + extension + Spark schema +
 a parse strategy. Parsing is executor-side and Arrow-batched:
 
 - ``csv`` readers use Spark's native CSV scan (JVM, splittable);
-- ``binary`` readers decode flat little-endian records from
-  ``binaryFile`` rows inside ``mapInPandas`` (numpy reshape per file —
-  the same np.fromfile(...).reshape(-1, n) the reference does, but
-  distributed one file per task).
+- ``binary`` readers decode flat little-endian records inside
+  ``mapInPandas``: each task reads its own files and reshapes them with
+  numpy — the same np.fromfile(...).reshape(-1, n) the reference does,
+  but distributed as contiguous runs of files per task, rows emitted in
+  (chunk_file, sample_idx) order without a sort.
 
 The registry doubles as the stream *catalog*: name → reader spec, the
 analog of StreamType rows, but plain data instead of generated classes

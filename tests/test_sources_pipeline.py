@@ -7,7 +7,9 @@ Fixture layout mirrors the reference's chunked file store:
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import io
 import os
 
 import numpy as np
@@ -87,6 +89,39 @@ def test_load_binary_amplifier_shape(spark, stream_root):
     assert [rows[0].ch0, rows[0].ch1, rows[0].ch2, rows[0].ch3] == [0, 1, 2, 3]
 
 
+def test_load_binary_orders_by_construction_without_exchange(spark, tmp_path):
+    # more files than cores, and file names whose order differs from the
+    # discovery order (time first): ProbeB's 00:00 chunk is listed before
+    # ProbeA's 01:00 chunk but sorts after every ProbeA file by name
+    n_files = spark.sparkContext.defaultParallelism + 3
+    want = []
+    for i in range(n_files):
+        probe = "AB"[i % 2]
+        d = tmp_path / "2024-01-01T00-00-00" / f"Probe{probe}"
+        d.mkdir(parents=True, exist_ok=True)
+        ts = dt.datetime(2024, 1, 1) + dt.timedelta(hours=i)
+        name = f"Probe{probe}_AmplifierData_{ts:%Y-%m-%dT%H-%M-%S}.bin"
+        n_samples = 3 + i
+        np.arange(100 * i, 100 * i + 4 * n_samples, dtype="<u2").tofile(d / name)
+        want += [(name, s, 100 * i + 4 * s) for s in range(n_samples)]
+    # splits of about 1/6 of the bytes: several tasks, several files each
+    n_bytes = sum(f.stat().st_size for f in tmp_path.rglob("*.bin"))
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n_bytes // 6))
+    try:
+        df = L.load(spark, str(tmp_path), REGISTRY["amplifier"])
+        assert 1 < df.rdd.getNumPartitions() < n_files
+        got = [(r.chunk_file, r.sample_idx, r.ch0) for r in df.collect()]
+    finally:
+        spark.conf.set(key, prev)
+    assert got == sorted(want)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    assert "Exchange" not in buf.getvalue()
+
+
 def test_stream_view_is_predicate_pushed(spark, stream_root):
     rdr = REGISTRY["encoder"]
     table = L.load(spark, stream_root, rdr)
@@ -131,6 +166,64 @@ def test_insert_skip_duplicates(spark, tmp_path):
     assert t.insert(df) == 0
     df2 = spark.createDataFrame([Row(k=2, v="b"), Row(k=3, v="c")])
     assert t.insert(df2) == 1
+
+
+def test_populate_inserts_no_rows_for_keys_outside_pending(spark, tmp_path):
+    root = str(tmp_path / "wh")
+    out = Table("leaky", pk=["k"], root=root, tier=Tier.COMPUTED)
+    out.insert(spark.createDataFrame([Row(k=0, v2=-1.0)]))
+    src = spark.createDataFrame([Row(k=i, v=float(i)) for i in range(5)])
+    # make ignores its pending keys: it re-emits the stored key 0 and an
+    # unknown key 99 beside the four pending ones
+    ct = ComputedTable(
+        table=out,
+        key_source=lambda s: src.select("k"),
+        make=lambda s, pend: src.select("k", (F.col("v") * 2).alias("v2")).unionByName(
+            s.createDataFrame([Row(k=99, v2=0.0)])
+        ),
+    )
+    ledger = RunLedger(root)
+    assert ct.populate(spark, ledger) == 4
+    assert {r.k: r.v2 for r in out.read(spark).collect()} == {0: -1.0, 1: 2.0, 2: 4.0, 3: 6.0, 4: 8.0}
+    assert ct.populate(spark, ledger) == 0
+    assert [(e["n_pending"], e["n_inserted"], e["status"]) for e in ledger.entries()] == [
+        (4, 4, "ok"), (0, 0, "noop"),
+    ]
+
+
+def test_noop_populate_never_builds_make(spark, tmp_path):
+    root = str(tmp_path / "wh")
+    out = Table("guarded", pk=["k"], root=root, tier=Tier.COMPUTED)
+    src = spark.createDataFrame([Row(k=i) for i in range(3)])
+    calls = []
+
+    def make(s, pend):
+        calls.append(1)
+        return pend.withColumn("v", F.lit(1.0))
+
+    ct = ComputedTable(table=out, key_source=lambda s: src, make=make)
+    ledger = RunLedger(root)
+    assert ct.populate(spark, ledger) == 3
+    assert ct.populate(spark, ledger) == 0
+    assert len(calls) == 1
+    # a make that drops every pending key is logged ok, not noop
+    dropping = ComputedTable(
+        table=Table("dropped", pk=["k"], root=root, tier=Tier.COMPUTED),
+        key_source=lambda s: src,
+        make=lambda s, pend: pend.withColumn("v", F.lit(1.0)).filter("k < 0"),
+    )
+    assert dropping.populate(spark, ledger) == 0
+    assert [(e["table"], e["n_inserted"], e["status"]) for e in ledger.entries()] == [
+        ("guarded", 3, "ok"), ("guarded", 0, "noop"), ("dropped", 0, "ok"),
+    ]
+
+
+def test_insert_skips_keys_stored_more_than_once(spark, tmp_path):
+    t = Table("dup_pk", pk=["k"], root=str(tmp_path))
+    dup = spark.createDataFrame([Row(k=1, v="a"), Row(k=1, v="b")])
+    assert t.insert(dup, skip_duplicates=False) == 2
+    assert t.insert(spark.createDataFrame([Row(k=1, v="c"), Row(k=2, v="d")])) == 1
+    assert sorted((r.k, r.v) for r in t.read(spark).collect()) == [(1, "a"), (1, "b"), (2, "d")]
 
 
 def test_delete_restriction_rewrites(spark, tmp_path):
