@@ -2082,9 +2082,13 @@ def lift_table(
     Plan — the shared :func:`_grain_prefix` two-level distributed
     prefix sum (the ``token_budget_select`` pattern), so the
     distinct-score grain is never a single sort even for continuous
-    scores; when the grain is provably ≤ ``score_buckets`` rows the
-    helper's cardinality-adaptive fast path skips the bucket level
-    (identical output, 2–3 fewer stages).
+    scores; when the grain is provably small the helper's
+    cardinality-adaptive fast path skips the bucket level (identical
+    output, 2–3 fewer stages). Two proofs engage it: the r14 file-size
+    bound on the scan (``spark.aeon.grain.fastPathMaxBytes``, default
+    128 MB), checked FIRST; else a grain of ≤ ``score_buckets`` rows.
+    So ``score_buckets`` alone does not force the bucketed plan on a
+    provably small scan — set the bound to ``0`` for that.
 
     The distinct-score table is persisted internally (three consumers:
     min/max, bucket totals, the scored join) and rides on the result

@@ -496,26 +496,37 @@ def test_q168_seasonal_medians_broadcast(spark, entry, sf_dir):
 
 
 def test_q169_lift_two_level_bucketed(spark, entry, sf_dir):
-    """Cardinality-adaptive prefix sum (round 9): at gate scale the
-    distinct-score grain is provably <= score_buckets, so the bucket
-    level is SKIPPED (no _cb partitioning — 2-3 fewer stages); forcing
-    a tiny bucket count must re-engage the two-level path with the
-    within-bucket window PARTITIONED by the coarse bucket. No
-    sort-merge join on either path."""
+    """Cardinality-adaptive prefix sum (rounds 9 and 14): at gate scale
+    the r14 file-size proof (the scan is far under
+    spark.aeon.grain.fastPathMaxBytes) SKIPS the bucket level (no _cb
+    partitioning — 2-3 fewer stages). The forced half turns that proof
+    off, so the count proof alone decides: the distinct-score grain
+    (311 rows) exceeds score_buckets=8, which must re-engage the
+    two-level path with the within-bucket window PARTITIONED by the
+    coarse bucket. No sort-merge join on either path. Both results
+    release their persisted grain once their plans are printed."""
     from aeon_mecha_spark.operators.analytics import lift_table
+    from aeon_mecha_spark.util import release_cached
     from pyspark.sql import functions as F
 
-    p = plan_str(entry.queries()["q169_lift_table"](spark, sf_dir))
+    q = entry.queries()["q169_lift_table"](spark, sf_dir)
+    p = plan_str(q)
+    release_cached(q)
     assert "SortMergeJoin" not in p
     assert "hashpartitioning(_cb" not in p  # fast path: no bucket level
     assert p.count("HashAggregate") >= 2
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    forced = lift_table(
-        docs, F.col("source") == "src0", "n_chars",
-        n_buckets=10, score_buckets=8,
-    )
-    pf = plan_str(forced)
+    spark.conf.set("spark.aeon.grain.fastPathMaxBytes", "0")
+    try:
+        forced = lift_table(
+            docs, F.col("source") == "src0", "n_chars",
+            n_buckets=10, score_buckets=8,
+        )
+        pf = plan_str(forced)
+        release_cached(forced)
+    finally:
+        spark.conf.unset("spark.aeon.grain.fastPathMaxBytes")
     assert "SortMergeJoin" not in pf
     assert "hashpartitioning(_cb" in pf  # scale path: bucket-keyed window
 
