@@ -22,6 +22,17 @@ from aeon_mecha_spark.functions.vector import cosine, dot, l2_distance, norm
 from aeon_mecha_spark.util import spread, track_cached
 
 
+def _at_least(vec: Column, n: int, what: str) -> Column:
+    """``vec`` unchanged, or a raised error on a row whose vector has fewer
+    than ``n`` elements. The literal-array folds below pair the vector
+    with ``zip_with``, which NULL-pads the shorter side, so a short vector
+    would otherwise give a silently NULL distance. A NULL vector passes."""
+    return F.when(
+        vec.isNotNull() & (F.size(vec) < n),
+        F.raise_error(F.lit(f"{what}: vector has fewer than {n} elements")),
+    ).otherwise(vec)
+
+
 def brute_force_knn(
     queries: DataFrame,
     corpus: DataFrame,
@@ -1099,6 +1110,9 @@ def ivf_pq_search(
     ]
     # the coarse + LUT math is the CPU-heavy per-row stage: spread a
     # single-file scan across the cluster before it (no-op at scale)
+    vectors = vectors.withColumn(
+        vec_col, _at_least(F.col(vec_col), max(dim, dim_coarse), "ivf_pq_search")
+    )
     withd = spread(vectors).select(
         F.col(id_col), F.col(vec_col), *dist_cols, *lut_cols
     )
@@ -1352,6 +1366,7 @@ def ivf_assign_bulk(
             for i, c in enumerate(centroids)
         ]
     )
+    vec = _at_least(F.col(vec_col), len(centroids[0]), "ivf_assign_bulk")
     amin = F.array_min(
         F.transform(
             cent,
@@ -1359,7 +1374,7 @@ def ivf_assign_bulk(
                 F.sqrt(
                     F.aggregate(
                         F.zip_with(
-                            F.col(vec_col), m["c"], lambda x, y: (x - y) * (x - y)
+                            vec, m["c"], lambda x, y: (x - y) * (x - y)
                         ),
                         F.lit(0.0),
                         lambda acc, x: acc + x,

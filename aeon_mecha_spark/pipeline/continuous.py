@@ -94,19 +94,11 @@ class ContinuousAggregate:
         # WHOLE partition with just the refreshed buckets, deleting
         # closed history — those tables take the upsert path instead
         if self.table.partition_by and self.bucket_col in self.table.partition_by:
-            out = fresh
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            out = fresh.cache()
             try:
-                out = out.cache()
                 n = out.count()
-                (
-                    out.write.mode("overwrite")
-                    .partitionBy(*self.table.partition_by)
-                    .parquet(self.table.path)
-                )
+                self.table.overwrite_partitions(out)
             finally:
                 out.unpersist()
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             return n
         return self.table.upsert(fresh)

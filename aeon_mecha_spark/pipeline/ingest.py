@@ -16,7 +16,10 @@ One deterministic batch flow, re-runnable on a grown file listing:
 
 ``fetch_stream`` is the read path (dj_pipeline/__init__.py:71-106):
 chunk-row semi-join → stream scan → sort — partition pruning does the
-chunk selection.
+chunk selection. Like the reference's declared table headings, the
+``Table`` that ``write_stream_table`` returns carries the schema it
+wrote, so building a fetch runs no Spark job (an inferring Parquet read
+would run one to read a footer).
 
 Scale: the listing is a metadata DataFrame (100 TB of data is ~10⁷
 hourly files — trivially a DataFrame); stats are one groupBy over the
@@ -84,13 +87,7 @@ def write_stream_table(
     t = Table(name, pk=[time_col], root=root, tier=Tier.IMPORTED, partition_by=["chunk_date"])
     # dynamic partition overwrite: re-running ingestion replaces exactly
     # the partitions it produces — idempotent without a PK anti-join
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("chunk_date").parquet(t.path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    t.overwrite_partitions(out)
     return t
 
 
@@ -104,9 +101,15 @@ def fetch_stream(
     """Read-path equivalent of ``fetch_stream`` (dj_pipeline/__init__.py:
     71-106): time-ranged scan, sorted by time. The chunk selection the
     reference does via chunk-PK restriction happens here as partition
-    pruning + parquet row-group skipping on the pushed time predicate."""
-    path = stream_table.path if isinstance(stream_table, Table) else stream_table
-    df = spark.read.parquet(path)
+    pruning + parquet row-group skipping on the pushed time predicate.
+
+    A ``Table`` is read with the schema it carries (``Table.scan``), so
+    building the fetch starts no Spark job; a path string is read with
+    Spark's schema inference, one footer-reading job per call."""
+    if isinstance(stream_table, Table):
+        df = stream_table.scan(spark)
+    else:
+        df = spark.read.parquet(stream_table)
     # derive predicates on the PARTITION column from the time range —
     # the row filter on `time` alone would scan every partition; the
     # chunk_date bounds are what partition pruning keys on

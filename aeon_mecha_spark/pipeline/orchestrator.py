@@ -23,6 +23,10 @@ Reference model → Spark model:
 - 3-phase make_fetch/make_compute/make_insert (spike_sorting.py:174-382)
   → read-DF / transform / write-DF, which is exactly a Spark job.
 
+Schema: a ``Table`` keeps the schema of what it holds (recorded on every
+write it makes, inferred at most once otherwise) and reads through it,
+the analog of DataJoint's declared table heading; see ``Table``.
+
 Idempotency: pending keys and ``Table.insert`` anti-join on the PK
 against what's already stored, so re-running after a partial failure or
 on overlapping key_sources never duplicates rows — the analog of the
@@ -41,6 +45,7 @@ from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 class Tier(str, Enum):
@@ -50,15 +55,44 @@ class Tier(str, Enum):
     COMPUTED = "computed"
 
 
+def _as_nullable(t: DataType) -> DataType:
+    """Spark's ``DataType.asNullable``: every field, element and map value
+    nullable, which is what a Parquet scan reports whatever was written."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
 @dataclass
 class Table:
-    """A Parquet-backed pipeline table with PK metadata."""
+    """A Parquet-backed pipeline table with PK metadata.
+
+    A table holds one schema, and the object keeps the schema of its data
+    files, so its reads (``read``, ``scan``, the anti-joins of ``insert``
+    and ``ComputedTable.pending``) hand it to the Parquet reader instead of
+    having Spark infer it from a footer, which costs a one-task job per
+    read. Every write through the object records the data columns it
+    leaves, all nullable, as the footer has them. A path the object never
+    wrote is inferred once, on its first read, and kept. An append whose
+    data columns differ from the record, or that goes to a path whose
+    schema is not known, drops the record, so the next read infers again.
+    Partition columns are never recorded: Spark types them from the
+    directory names while it lists the files, as an inferring read does,
+    and puts them last. Writes to the path that bypass the object are not
+    seen, which is why the schema lives on the object and not in a cache
+    keyed on the path.
+    """
 
     name: str
     pk: list[str]
     root: str
     tier: Tier = Tier.MANUAL
     partition_by: list[str] = field(default_factory=list)
+    _schema: StructType | None = field(default=None, init=False, repr=False, compare=False)
 
     @property
     def path(self) -> str:
@@ -78,18 +112,41 @@ class Table:
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not self.exists(spark):
             return None
-        return spark.read.parquet(self.path)
+        return self.scan(spark)
+
+    def scan(self, spark: SparkSession) -> DataFrame:
+        """The stored rows, read with the recorded data schema (inferred
+        here, once, if this object has not written or read the path)."""
+        if self._schema is None:
+            df = spark.read.parquet(self.path)
+            self._schema = self._data_schema(df)
+            return df
+        return spark.read.schema(self._schema).parquet(self.path)
+
+    def _data_schema(self, df: DataFrame) -> StructType:
+        return StructType([f for f in df.schema.fields if f.name not in self.partition_by])
+
+    def _record(self, df: DataFrame, replaced: bool) -> None:
+        """Keep the data schema a write of ``df`` left. ``replaced``: the
+        write replaced the table's contents (or created it); an append
+        keeps the record only if it matches."""
+        s = _as_nullable(self._data_schema(df))
+        self._schema = s if replaced or s == self._schema else None
 
     def insert(self, df: DataFrame, skip_duplicates: bool = True) -> int:
         """Idempotent append (S13): anti-join on PK against stored rows —
         the MERGE-less equivalent of ``insert(skip_duplicates=True)``.
         Returns the number of rows appended."""
         spark = df.sparkSession
-        if skip_duplicates and self.exists(spark):
+        existed = self.exists(spark)
+        if skip_duplicates and existed:
             # a left_anti join drops a row on any match, so duplicate
-            # stored keys need no dedupe (it would cost a shuffle)
-            done = spark.read.parquet(self.path).select(*self.pk)
-            df = df.join(done, self.pk, "left_anti")
+            # stored keys need no dedupe (it would cost a shuffle); the
+            # join moves the keys first, and the select puts the columns
+            # back in the order the first write used, so every file of
+            # the table has one schema
+            done = self.scan(spark).select(*self.pk)
+            df = df.join(done, self.pk, "left_anti").select(*df.columns)
         df = df.cache()
         n = df.count()
         if n:
@@ -97,6 +154,7 @@ class Table:
             if self.partition_by:
                 writer = writer.partitionBy(*self.partition_by)
             writer.parquet(self.path)
+            self._record(df, replaced=not existed)
         df.unpersist()
         return n
 
@@ -121,8 +179,23 @@ class Table:
             w.parquet(dest)
 
         _write(out, tmp)
-        _write(spark.read.parquet(tmp), self.path)
+        self._record(out, replaced=True)
+        _write(spark.read.schema(self._schema).parquet(tmp), self.path)
         self._rm(spark, tmp)
+
+    def overwrite_partitions(self, df: DataFrame) -> None:
+        """Dynamic partition overwrite: replace exactly the
+        ``partition_by`` partitions ``df`` holds and keep the others,
+        which are expected to hold the same columns (the table's schema
+        becomes ``df``'s)."""
+        spark = df.sparkSession
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(self.path)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        self._record(df, replaced=True)
 
     def upsert(self, df: DataFrame) -> int:
         """MERGE-by-PK without Delta: replace stored rows whose PK
@@ -150,7 +223,7 @@ class Table:
             cur = self.read(spark)
             if cur is None:
                 return self.insert(df, skip_duplicates=False)
-            keep = cur.join(df.select(*self.pk), self.pk, "left_anti")
+            keep = cur.join(df.select(*self.pk), self.pk, "left_anti").select(*cur.columns)
             self._rewrite(spark, keep.unionByName(df.select(*cur.columns)))
             return n
         finally:

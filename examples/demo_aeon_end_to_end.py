@@ -101,7 +101,7 @@ def main() -> None:
         # table restricted to devices carrying this stream (the
         # reference's Chunk ⋈ device-active-interval join)
         return (
-            sp.read.parquet(chunk_t.path)
+            chunk_t.scan(sp)
             .filter(F.col("device_name") == "Patch1")
             .select("experiment_name", "device_name", "chunk_ts")
         )
@@ -154,7 +154,7 @@ def main() -> None:
 
     # -- 5. QUERY: relational algebra over the populated store ---------------
     summaries = Relation(
-        spark.read.parquet(summary_t.path),
+        summary_t.scan(spark),
         pk=["experiment_name", "device_name", "chunk_ts"],
     )
     busy = summaries & "sample_count >= 100"
@@ -164,7 +164,7 @@ def main() -> None:
     ).df.show(truncate=False)
 
     print("[query] whole-stream column stats (4-dp means, reference parity):")
-    column_stats(raw, ["angle", "intensity"], keys=["device_name"]).show(truncate=False)
+    column_stats(raw, ["angle", "intensity"], group_keys=["device_name"]).show(truncate=False)
 
     spark.stop()
     print("end-to-end demo complete")
