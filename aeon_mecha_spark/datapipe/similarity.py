@@ -1366,7 +1366,10 @@ def ivf_assign_bulk(
             for i, c in enumerate(centroids)
         ]
     )
-    vec = _at_least(F.col(vec_col), len(centroids[0]), "ivf_assign_bulk")
+    # the leading dimensions, as the unrolled `ivf_assign` reads them:
+    # zip_with would NULL-pad the centroid side of a longer vector
+    dim = len(centroids[0])
+    vec = F.slice(_at_least(F.col(vec_col), dim, "ivf_assign_bulk"), 1, dim)
     amin = F.array_min(
         F.transform(
             cent,

@@ -31,6 +31,18 @@ def _unrolled_sum(terms: list[Column]) -> Column:
     return acc
 
 
+def _same_size(a: Column, b: Column, what: str) -> Column:
+    """``a`` unchanged, or a raised error on a row where ``a`` and ``b``
+    are both non-NULL and differ in size. The generic folds pair them
+    with ``zip_with``, which NULL-pads the shorter side, so a size
+    mismatch would otherwise give a silently NULL result. A NULL vector
+    passes (the fold then gives NULL, as before)."""
+    return F.when(
+        a.isNotNull() & b.isNotNull() & (F.size(a) != F.size(b)),
+        F.raise_error(F.lit(f"{what}: vectors differ in size")),
+    ).otherwise(a)
+
+
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Σ aᵢbᵢ, left-to-right summation order — bit-identical to DuckDB's
     list_dot_product for oracle checks.
@@ -41,13 +53,15 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     plain element_at arithmetic: the same fold order, but compiled into
     the stage's generated Java — ~3-5× cheaper per pair, which is the
     difference that matters when a bucketed self-join scores millions of
-    candidate pairs."""
+    candidate pairs. A non-NULL pair of unequal sizes raises on the
+    generic path; the unrolled path reads the first ``dim`` elements of
+    each (a shorter vector fails ANSI ``element_at``)."""
     if dim is not None and dim <= MAX_UNROLL_DIM:
         return _unrolled_sum(
             [F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)]
         )
     return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
+        F.zip_with(_same_size(a, b, "dot"), b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
@@ -80,7 +94,7 @@ def l2_distance(a: Column, b: Column, dim: int | None = None) -> Column:
         )
     return F.sqrt(
         F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.zip_with(_same_size(a, b, "l2_distance"), b, lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )

@@ -20,7 +20,9 @@ Reference semantics re-expressed:
    Catalyst into the scan for CSV.
 
 At 100 TB the same code applies: discovery is a listing job, pruning cuts
-the file set by wall-clock window, and each chunk file is one task.
+the file set by wall-clock window, and a task reads about one scan split
+(``spark.sql.files.maxPartitionBytes``): binary chunks in contiguous runs
+of files sized by it, CSV chunks through Spark's own file splits.
 """
 
 from __future__ import annotations

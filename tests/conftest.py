@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -16,6 +17,28 @@ def spark():
     s = get_spark("tests", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: (result of ``fn()``, Spark jobs it started),
+    counted through a fresh job group."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs_{next(_job_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -11,6 +11,7 @@ import contextlib
 import datetime as dt
 import io
 import os
+import time
 
 import numpy as np
 import pytest
@@ -276,6 +277,20 @@ def test_multimodal_non_image_decode_is_stubbed(spark):
     )
     with pytest.raises(Exception):
         MM.extract_features(audio, fake=False).collect()
+    # a failed job returns before its killed tasks stop; wait for them
+    # (bounded), or the next test's task can get a Python worker whose
+    # channel they cancel (CancelledKeyException). A failed stage leaves
+    # the active list while its killed tasks still run, so the executors'
+    # running-task counts are watched too
+    sc = spark.sparkContext
+
+    def busy():
+        executors = sc._jsc.sc().statusTracker().getExecutorInfos()
+        return sc.statusTracker().getActiveStageIds() or any(e.numRunningTasks() for e in executors)
+
+    deadline = time.monotonic() + 30
+    while busy() and time.monotonic() < deadline:
+        time.sleep(0.1)
 
 
 def test_multimodal_image_features_are_real(spark):
