@@ -20,8 +20,8 @@ chunk selection the reference does with a chunk restriction. Like the
 reference's declared table headings, the ``Table`` that
 ``write_stream_table`` returns carries the schema it wrote, so building
 a fetch runs no Spark job (an inferring Parquet read would run one to
-read a footer). The sort is sized by the window: when the ``chunk_date``
-partitions it selects hold at most one scan split
+read a footer). The sort is sized by the window: when the files Spark's
+partition pruning selects for it hold at most one scan split
 (``spark.sql.files.maxPartitionBytes``), one task reads and sorts them
 (one job, one output partition, so a per-stream operator on the fetch
 plans no exchange); a larger window keeps the parallel range sort. The
@@ -38,8 +38,6 @@ time-ranged reads prune partitions.
 from __future__ import annotations
 
 import os
-from datetime import date, datetime, timedelta, timezone
-from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,59 +99,18 @@ def write_stream_table(
     return t
 
 
-def _bound_date(spark: SparkSession, bound, before: timedelta = timedelta(0)) -> date | None:
-    """The date ``to_date(lit(bound) - before)`` gives in the session time
-    zone, as the ``chunk_date`` filters of ``fetch_stream`` compute it. A
-    naive ``datetime`` is read in the Python process's local zone, as
-    PySpark turns it into a (``TIMESTAMP_LTZ``) literal. None for a bound
-    that is not a ``datetime`` or a session zone that ``zoneinfo`` does
-    not know: the caller then takes every partition on that side, and
-    more bytes can only keep the parallel sort."""
-    if not isinstance(bound, datetime):
+def _scan_bytes(df: DataFrame) -> int | None:
+    """Bytes of the files that the file scan under ``df`` selects: Spark's
+    own partition pruning by ``df``'s filters, over the listing the scan's
+    file index already holds (no file-system call). None when the plan
+    does not read one file scan; the caller then keeps the parallel sort."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    if leaves.size() != 1:
         return None
-    try:
-        zone = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
-    except (KeyError, ValueError):  # ZoneInfoNotFoundError is a KeyError
+    scan = leaves.apply(0)
+    if scan.getClass().getSimpleName() != "FileSourceScanExec":
         return None
-    return (bound.astimezone(timezone.utc) - before).astimezone(zone).date()
-
-
-# above this many days a window's partitions are found by listing every
-# partition rather than by naming each of its dates in one glob
-_GLOB_DAYS = 366
-
-
-def _window_bytes(spark: SparkSession, path: str, lo: date | None, hi: date | None, limit: int) -> int:
-    """Bytes of the ``chunk_date=D`` partitions of ``path`` with
-    lo <= D <= hi (None: open), summed until they pass ``limit``. Hadoop
-    FileSystem calls, so any Hadoop-compatible root (file://, s3a://,
-    hdfs://) works; a closed window of up to ``_GLOB_DAYS`` days names its
-    dates in one glob, so the listing returns only its own partitions. A
-    partition whose value is not a date (a NULL date) is counted."""
-    if lo is not None and hi is not None and lo > hi:
-        return 0
-    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    root = hpath(path)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    named = lo is not None and hi is not None and (hi - lo).days < _GLOB_DAYS
-    if named:
-        dates = ",".join(str(lo + timedelta(days=i)) for i in range((hi - lo).days + 1))
-        pattern = f"chunk_date={{{dates}}}"
-    else:
-        pattern = "chunk_date=*"
-    total = 0
-    for part in fs.globStatus(hpath(root, pattern)) or ():
-        if not named:
-            try:
-                d = date.fromisoformat(part.getPath().getName().split("=", 1)[1])
-                if (lo is not None and d < lo) or (hi is not None and d > hi):
-                    continue
-            except ValueError:
-                pass
-        total += fs.getContentSummary(part.getPath()).getLength()
-        if total > limit:
-            break
-    return total
+    return scan.selectedPartitions().totalFileSize()
 
 
 def fetch_stream(
@@ -172,25 +129,23 @@ def fetch_stream(
     building the fetch starts no Spark job; a path string is read with
     Spark's schema inference, one footer-reading job per call.
 
-    The sort follows the window's size. The bytes of the ``chunk_date``
-    partitions that the window's date bounds select (an open bound takes
-    every partition on its side) are summed from the file system. If they
-    fit one scan split (``spark.sql.files.maxPartitionBytes``), one task
-    reads the window and sorts it: ``coalesce(1).sortWithinPartitions``,
-    one job with a single output partition, which every per-stream
-    clustering downstream already satisfies, so an operator on the fetch
-    plans no exchange. Otherwise ``orderBy`` range-sorts in parallel, at
-    the cost of a boundary-sampling job and a shuffle. Both give the same
-    rows in the same order. The decision depends on the window (its length
-    times one stream's rate), never on the store's size: a fetch of hours
-    or a few days of one day-partitioned stream stays under one split
-    however large the store grows, and a long window keeps the parallel
-    sort."""
+    The sort follows the window's size: the bytes of the files the scan
+    selects once Spark has pruned the ``chunk_date`` partitions by the
+    window's filters (``_scan_bytes``; an open bound takes every partition
+    on its side). If they fit one scan split
+    (``spark.sql.files.maxPartitionBytes``), one task reads the window and
+    sorts it: ``coalesce(1).sortWithinPartitions``, one job with a single
+    output partition, which every per-stream clustering downstream already
+    satisfies, so an operator on the fetch plans no exchange. Otherwise
+    ``orderBy`` range-sorts in parallel, at the cost of a
+    boundary-sampling job and a shuffle. Both give the same rows in the
+    same order. The decision depends on the window (its length times one
+    stream's rate), never on the store's size, so it holds however large
+    the store grows; the threshold compares compressed Parquet bytes with
+    the split, and the one task decompresses and sorts them all."""
     if isinstance(stream_table, Table):
-        path = stream_table.path
         df = stream_table.scan(spark)
     else:
-        path = stream_table
         df = spark.read.parquet(stream_table)
     # derive predicates on the PARTITION column from the time range —
     # the row filter on `time` alone would scan every partition; the
@@ -205,9 +160,8 @@ def fetch_stream(
         # (end − 1 µs), so a midnight end doesn't read the next day
         last_date = F.to_date(F.lit(end) - F.expr("INTERVAL 1 MICROSECOND"))
         df = df.filter((F.col(time_col) < F.lit(end)) & (F.col("chunk_date") <= last_date))
-    lo = None if start is None else _bound_date(spark, start)
-    hi = None if end is None else _bound_date(spark, end, timedelta(microseconds=1))
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    if _window_bytes(spark, path, lo, hi, split) <= split:
+    size = _scan_bytes(df)
+    if size is not None and size <= split:
         return df.coalesce(1).sortWithinPartitions(time_col)
     return df.orderBy(time_col)

@@ -65,8 +65,8 @@ def test_small_window_is_one_sorted_partition(spark, tmp_path):
 def test_large_window_keeps_the_range_sort(spark, tmp_path):
     t = _table(spark, tmp_path)
     small = ingest.fetch_stream(spark, t, START, END).collect()
-    last = (END - dt.timedelta(microseconds=1)).date()
-    window = ingest._window_bytes(spark, t.path, START.date(), last, 1 << 40)
+    # the window spans all 3 days
+    window = _dir_bytes(t.path)
     old = spark.conf.get(_SPLIT)
     spark.conf.set(_SPLIT, str(window - 1))
     try:
@@ -85,9 +85,7 @@ def test_window_bytes_count_only_selected_dates(spark, tmp_path):
     assert all(day.values())
 
     def window(start, end):
-        lo = None if start is None else ingest._bound_date(spark, start)
-        hi = None if end is None else ingest._bound_date(spark, end, dt.timedelta(microseconds=1))
-        return ingest._window_bytes(spark, t.path, lo, hi, 1 << 40)
+        return ingest._scan_bytes(ingest.fetch_stream(spark, t, start, end))
 
     # an exclusive midnight end leaves the next day's partition out
     assert window(dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 3)) == day[2]
@@ -96,9 +94,8 @@ def test_window_bytes_count_only_selected_dates(spark, tmp_path):
     assert window(dt.datetime(2024, 1, 2, 23), None) == day[2] + day[3]
     assert window(None, dt.datetime(2024, 1, 2)) == day[1]
     assert window(None, None) == sum(day.values())
-    # the sum stops once it passes the limit
-    lo, hi = dt.date(2024, 1, 1), dt.date(2024, 1, 3)
-    assert ingest._window_bytes(spark, t.path, lo, hi, day[1]) == day[1] + day[2]
+    # a path string is sized as a Table is
+    assert ingest._scan_bytes(ingest.fetch_stream(spark, t.path, START, END)) == sum(day.values())
 
 
 def test_small_window_runs_one_job(spark, count_jobs, tmp_path):
