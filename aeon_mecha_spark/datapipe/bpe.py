@@ -33,7 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from aeon_mecha_spark.functions.text import tokens
+from aeon_mecha_spark.functions.text import shifted_slices, tokens
 from aeon_mecha_spark.util import spread, track_cached
 
 
@@ -113,6 +113,23 @@ def apply_bpe_merges(
     )
 
 
+def _pair_counts(words: DataFrame) -> DataFrame:
+    """``(_p struct<l, r>, _c)``: each adjacent symbol pair of the word
+    table ``(_syms, _n)``, weighted by word frequency. ``_syms`` is in
+    the padded double-space encoding, whose inter-symbol separator is
+    exactly two spaces, so a literal "  " split recovers the symbol
+    array; it is split once per word into ``_a``, and the pairs are two
+    shifted slices of it zipped."""
+    left, right = shifted_slices(F.col("_a"), 2)
+    return (
+        words.select(F.split(F.trim(F.col("_syms")), "  ").alias("_a"), "_n")
+        .filter(F.size("_a") >= 2)
+        .select(F.explode(F.arrays_zip(left.alias("l"), right.alias("r"))).alias("_p"), "_n")
+        .groupBy("_p")
+        .agg(F.sum("_n").alias("_c"))
+    )
+
+
 def bpe_learn(
     docs: DataFrame,
     n_merges: int = 8,
@@ -159,21 +176,8 @@ def bpe_learn(
     merges: list[tuple[int, str, str, int]] = []
     try:
         for rank in range(1, int(n_merges) + 1):
-            # _syms stays in the padded double-space encoding; the
-            # inter-symbol separator is exactly two spaces, so a
-            # literal "  " split recovers the symbol array.
-            arr = F.split(F.trim(F.col("_syms")), "  ")
-            pair = F.transform(
-                F.slice(arr, 1, F.size(arr) - 1),
-                lambda x, i: F.struct(
-                    x.alias("l"), F.element_at(arr, i + F.lit(2)).alias("r")
-                ),
-            )
             best = (
-                cur.filter(F.size(arr) >= 2)
-                .select(F.explode(pair).alias("_p"), "_n")
-                .groupBy("_p")
-                .agg(F.sum("_n").alias("_c"))
+                _pair_counts(cur)
                 .orderBy(F.col("_c").desc(), F.col("_p.l").asc(), F.col("_p.r").asc())
                 .limit(1)
                 .collect()

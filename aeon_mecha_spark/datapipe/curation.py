@@ -626,17 +626,18 @@ def chunk_documents(
     the final chunk is short rather than padded, and a document shorter
     than one chunk yields exactly one chunk (empty docs yield chunk 0
     with 0 tokens). Everything is per-document Catalyst array work —
-    tokenize once, slice per chunk via transform over a sequence — so
-    there is no shuffle and no Python; the explode multiplies rows by
-    ~len/stride exactly like the shingle explode the dedup path already
-    scales with.
+    tokenize once into a column, slice that column per chunk via
+    transform over a sequence — so there is no shuffle and no Python;
+    the explode multiplies rows by ~len/stride exactly like the shingle
+    explode the dedup path already scales with.
     """
     if overlap >= chunk_tokens:
         raise ValueError(
             f"chunk_documents: overlap ({overlap}) must be < chunk_tokens ({chunk_tokens})"
         )
     stride = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
+    # the chunk lambda slices a column, never a re-evaluated tokens(text)
+    toks = F.col("_t")
     n = F.size(toks)
     # integer ceil((n - overlap) / stride), clamped to >= 1: double
     # division + truncating cast is exact at these magnitudes and the
@@ -659,6 +660,7 @@ def chunk_documents(
     )
     return (
         spread(docs)
+        .select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
         .select(F.col(id_col), F.explode(chunks).alias("c"))
         .select(
             F.col(id_col),

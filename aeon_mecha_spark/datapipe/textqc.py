@@ -17,8 +17,10 @@ from aeon_mecha_spark.functions.text import (
     mean_token_len,
     normalize_text,
     punct_ratio,
+    shifted_slices,
     stopword_ratio,
     token_count,
+    token_ngrams,
     tokens,
     word_shingles,
 )
@@ -586,17 +588,17 @@ def repetition_signals(
     dup_3gram_frac_ppm, top_bigram, top_bigram_count,
     top_bigram_frac_ppm)``.
     """
-    t = F.col(text_col)
-    toks = tokens(t)
+    toks = F.col("_t")
     n_tok = F.size(toks)
 
     def grams(k: int) -> Column:
-        idx = F.sequence(F.lit(1), n_tok - (k - 1))
-        joined = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-        return F.when(n_tok >= k, joined).otherwise(F.array().cast("array<string>"))
+        return F.when(n_tok >= k, token_ngrams(toks, k)).otherwise(
+            F.array().cast("array<string>")
+        )
 
     g2, g3 = grams(2), grams(3)
-    base = spread(docs).select(
+    tokenized = spread(docs).select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
+    base = tokenized.select(
         F.col(id_col),
         n_tok.cast("long").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("_d_tok"),
@@ -618,8 +620,7 @@ def repetition_signals(
         ppm("_n_g3 - _d_g3", "_n_g3").alias("dup_3gram_frac_ppm"),
     )
     counts = (
-        spread(docs)
-        .select(F.col(id_col), F.explode(g2).alias("gram"))
+        tokenized.select(F.col(id_col), F.explode(g2).alias("gram"))
         .groupBy(id_col, "gram")
         .agg(F.count(F.lit(1)).cast("long").alias("top_bigram_count"))
     )
@@ -795,17 +796,14 @@ def bigram_logprob(
     Output: ``(id, n_bigrams, n_unseen, logprob_per_bigram)``; docs
     with fewer than 2 tokens produce no row.
     """
-    arr = tokens(F.col(text_col))
-    pairs = F.transform(
-        F.slice(arr, 1, F.size(arr) - 1),
-        lambda x, i: F.struct(
-            x.alias("_w1"), F.element_at(arr, i + F.lit(2)).alias("_w2")
-        ),
-    )
+    w1, w2 = shifted_slices(F.col("_t"), 2)
     bg = (
         spread(docs)
-        .filter(F.size(arr) >= 2)
-        .select(F.col(id_col), F.explode(pairs).alias("_p"))
+        .select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
+        .filter(F.size("_t") >= 2)
+        .select(
+            F.col(id_col), F.explode(F.arrays_zip(w1.alias("_w1"), w2.alias("_w2"))).alias("_p")
+        )
         .select(id_col, F.col("_p._w1").alias("_w1"), F.col("_p._w2").alias("_w2"))
     )
     c12 = bg.groupBy("_w1", "_w2").agg(F.count(F.lit(1)).cast("long").alias("_c12"))

@@ -3,6 +3,15 @@
 All pure Catalyst expressions (regexp/split/aggregate) so they run
 JVM-side at 100 TB — no Python in the per-document path. Semantics are
 chosen to be expressible 1:1 in ANSI SQL for the DuckDB oracle.
+
+Array lambdas (``transform``, ``filter``, ``aggregate``, ``zip_with``)
+are interpreted and evaluate their body once per element, including
+every expression the body captures from outside. A body that indexes or
+slices a computed array such as ``tokens(text)`` re-splits the whole
+document for every token: quadratic in document length. So a lambda
+reads only columns or its own element; k-grams come from aligned
+``slice`` views zipped by :func:`shifted_slices`, and an operator that
+indexes its tokens per element projects them into a column first.
 """
 
 from __future__ import annotations
@@ -56,6 +65,11 @@ def char_shingles(text: Column, k: int = 5) -> Column:
     empty array for strings shorter than k. Building block for MinHash /
     n-gram Jaccard dedup.
 
+    Pass a plain column: the per-position lambda captures ``text`` and
+    re-evaluates it for every shingle, so a computed argument (say
+    ``lower(col)``) would be recomputed len times per row. Project it
+    into a column first.
+
     The length guard is load-bearing: Spark's ``sequence(1, 0)`` DESCENDS
     to ``[1, 0]`` (implicit step −1 when start > stop), so the unguarded
     index range would emit two truncated garbage shingles for short
@@ -67,13 +81,31 @@ def char_shingles(text: Column, k: int = 5) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def shifted_slices(toks: Column, k: int) -> list[Column]:
+    """The k aligned views ``toks[1..m], toks[2..m+1], …, toks[k..n]``
+    (m = n − k + 1, or 0 when n < k): zipped, row i is the k-gram
+    starting at token i. Lambda-free, so ``toks`` is evaluated k + 1
+    times per row whatever n is."""
+    if k < 1:
+        raise ValueError(f"shifted_slices: k must be >= 1, got {k}")
+    m = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(0))
+    return [F.slice(toks, j + 1, m) for j in range(k)]
+
+
+def token_ngrams(toks: Column, k: int) -> Column:
+    """The space-joined k-grams of a token array, in order; empty when it
+    holds fewer than k tokens, NULL for a NULL array. The join lambda
+    reads only its own zipped element."""
+    grams = F.arrays_zip(*[s.alias(f"w{j}") for j, s in enumerate(shifted_slices(toks, k))])
+    return F.transform(grams, lambda g: F.concat_ws(" ", *[g[f"w{j}"] for j in range(k)]))
+
+
 def word_shingles(text: Column, k: int = 3) -> Column:
     """All k-word shingles (space-joined) — cheaper than char shingles on
-    long documents, standard for MinHash document dedup."""
+    long documents, standard for MinHash document dedup. A document with
+    fewer than k tokens is one shingle, its tokens joined."""
     toks = tokens(text)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
-    return F.when(n >= k, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))).otherwise(
+    return F.when(F.size(toks) >= k, token_ngrams(toks, k)).otherwise(
         F.array(F.concat_ws(" ", toks))
     )
 

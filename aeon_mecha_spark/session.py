@@ -46,6 +46,11 @@ def get_spark(
       I/O bound, so compression is a throughput win.
     - session TZ UTC — parity with the reference's tz-naive timestamps
       and with the DuckDB oracle.
+    - ``ansi.enabled`` true — Spark 4.1's default, pinned so the session
+      does not follow a cluster-wide override. The operators are
+      specified and tested under ANSI semantics only (overflow, invalid
+      casts and out-of-range ``element_at`` raise instead of yielding
+      NULL); their results with ANSI off are not specified.
     """
     cpus = _DEFAULT_CPUS
     if master is None:
@@ -68,6 +73,7 @@ def get_spark(
         # watermarks) become metadata reads instead of table scans
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

@@ -647,6 +647,42 @@ def test_scalar_helper_parity(spark):
     (short,) = df.select(char_shingles(F.col("s"), k=9).alias("sh")).collect()
     assert short.sh == []  # shorter than k: no shingles
 
+    # word_shingles against a pure-Python mirror and against the
+    # per-position slice form it replaced: empty and whitespace-only
+    # text, n < k, n = k, k = 1, a leading tab (trim keeps it, so the
+    # split yields a leading empty token) and NULL.
+    import re
+
+    from aeon_mecha_spark.functions.text import tokens, word_shingles
+
+    def mirror(text, k):
+        t = text.strip(" ")
+        toks = [] if t == "" else re.split(r"[ \t\n\x0b\f\r]+", t)
+        if len(toks) < k:
+            return [" ".join(toks)]
+        return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+    def sliced(text, k):
+        toks = tokens(text)
+        n = F.size(toks)
+        idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
+        return F.when(
+            n >= k, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
+        ).otherwise(F.array(F.concat_ws(" ", toks)))
+
+    texts = ["", "   ", "a b", "a b c", "a  b c d e", "\tp q r", " x ", None]
+    wdf = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, s string")
+    for k in (1, 2, 3):
+        rows = wdf.orderBy("i").select(
+            "s",
+            word_shingles(F.col("s"), k).alias("w"),
+            sliced(F.col("s"), k).alias("ref"),
+        ).collect()
+        for r in rows:
+            assert r.w == r.ref, (k, r.s)
+            if r.s is not None:
+                assert r.w == mirror(r.s, k), (k, r.s)
+
     iv = spark.createDataFrame(
         [(1, 5, 5, 9), (1, 5, 6, 9)], "a0 int, a1 int, b0 int, b1 int"
     )

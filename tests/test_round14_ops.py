@@ -221,3 +221,11 @@ def test_narrow_scan_bytes_soundness(spark, sf_dir):
     # Union is excluded: inputFiles() dedupes, so a self-union would
     # undercount bytes 2x -> must return None
     assert narrow_scan_bytes(g.unionByName(g)) is None
+
+
+def test_session_pins_ansi_mode(spark):
+    """get_spark sets ANSI mode explicitly, not through Spark's default:
+    the key reaches the context's conf, and the SQL conf reads true."""
+    assert spark.sparkContext.getConf().get("spark.sql.ansi.enabled") == "true"
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    assert spark._jsparkSession.sessionState().conf().ansiEnabled()
