@@ -84,8 +84,8 @@ def char_shingles(text: Column, k: int = 5) -> Column:
 def shifted_slices(toks: Column, k: int) -> list[Column]:
     """The k aligned views ``toks[1..m], toks[2..m+1], …, toks[k..n]``
     (m = n − k + 1, or 0 when n < k): zipped, row i is the k-gram
-    starting at token i. Lambda-free, so ``toks`` is evaluated k + 1
-    times per row whatever n is."""
+    starting at token i. Lambda-free, so ``toks`` is evaluated a fixed
+    number of times per row (at most 2k), whatever n is."""
     if k < 1:
         raise ValueError(f"shifted_slices: k must be >= 1, got {k}")
     m = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(0))
